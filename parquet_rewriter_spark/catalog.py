@@ -4009,7 +4009,7 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     carrying a NEW column (vip_tier) for 1% of keys — only dirty files
     are rewritten with the wider schema; untouched files keep their
     bytes and read() null-fills the new column from the manifest schema
-    (operators/merge.py + table.py:_reader)."""
+    (operators/merge.py + table.py:read_files)."""
     from parquet_rewriter_spark.operators.merge import OP_COLUMN, OP_UPSERT, merge_into_table
     from parquet_rewriter_spark.table import SortedTable
 

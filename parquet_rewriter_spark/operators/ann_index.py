@@ -239,7 +239,12 @@ class IVFVectorIndex:
             if not distributed:
                 ids = sorted({r[0] for r in head})
         elif not distributed:
-            ids = sorted({r[0] for r in df.select(id_col).collect()})
+            # the caller forced the driver path without the capped
+            # probe: dedupe before collecting, so the driver receives
+            # each id once however often the batch repeats it
+            ids = sorted(
+                r[0] for r in df.select(id_col).distinct().collect()
+            )
 
         if not distributed:
             # A re-added vector that STAYS in its cell keeps the same
@@ -286,7 +291,8 @@ class IVFVectorIndex:
             # lookup; exclude keys the upsert overwrites in place (same
             # cell) so delete/upsert key sets stay disjoint in-batch
             live = self.table.read_physical().select(IDX_KEY, id_col)
-            ids_df = df.select(id_col).distinct()
+            # no dedup: a semi join emits each live row at most once
+            ids_df = df.select(id_col)
             stale_df = live.join(ids_df, id_col, "left_semi").join(
                 ups.select(IDX_KEY), IDX_KEY, "left_anti"
             ).select(IDX_KEY)

@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 if TYPE_CHECKING:
+    from pyspark.sql.types import StructType
+
     from parquet_rewriter_spark.table import ManifestEntry, SortedTable
 
 from parquet_rewriter_spark.operators.sidecar import register_sidecar
@@ -51,7 +53,7 @@ BLOOM_DIR = register_sidecar("_blooms")
 BLOOM_K = 7
 BLOOM_BITS_PER_KEY = 10
 
-_SIDECAR_SCHEMA = "file string, col string, m long, bits binary"
+BLOOM_SCHEMA = "file string, col string, m long, bits binary"
 
 # probe-value count at or under which the hashes inline as literal
 # expressions (zero extra jobs); above it they ride a broadcast
@@ -94,26 +96,30 @@ def _hashed_values_rel(spark: SparkSession, col_type, values: Sequence[Any]):
 
 
 def build_blooms(
-    table: "SortedTable", entries: list["ManifestEntry"], cols: list[str]
+    table: "SortedTable",
+    entries: list["ManifestEntry"],
+    cols: list[str],
+    schema: "StructType | str | None" = None,
 ) -> int:
     """Build and append sidecar bloom rows for ``entries`` (new files).
 
     One job: scan only those files, project (file, k hashes per col),
     fold into per-(file, col) bitmaps in mapInPandas (each task sees
     one file's rows in practice — file-sized input splits — so partials
-    are few), OR partials per file, append to the sidecar.
+    are few), OR partials per file, append to the sidecar. ``schema``
+    is what the files were written with (``SortedTable.read_files``);
+    None infers it from a footer, one extra job.
     """
     if not entries or not cols:
         return 0
     spark = table.spark
-    paths = [os.path.join(table.path, e.name) for e in entries]
     m_by_file = {e.name: _m_for_rows(e.rows) for e in entries}
     bc = spark.sparkContext.broadcast(m_by_file)
 
     proj = [F.element_at(F.split(F.input_file_name(), "/"), -1).alias("__f")]
     for c in cols:
         proj += [h.alias(f"__h_{c}_{s}") for s, h in enumerate(_hash_exprs(c))]
-    df = spark.read.parquet(*paths).select(*proj)
+    df = table.read_files([e.name for e in entries], schema).select(*proj)
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         m_map = bc.value
@@ -136,7 +142,7 @@ def build_blooms(
         ]
         yield pd.DataFrame(out, columns=["file", "col", "m", "bits"])
 
-    partials = df.mapInPandas(fold, schema=_SIDECAR_SCHEMA)
+    partials = df.mapInPandas(fold, schema=BLOOM_SCHEMA)
 
     def merge(key, pdf):  # (no hints: Spark's eval-type inference warns on partial ones)
         bm = None
@@ -149,7 +155,7 @@ def build_blooms(
             [{"file": key[0], "col": key[1], "m": m, "bits": bm.tobytes()}]
         )
 
-    final = partials.groupBy("file", "col").applyInPandas(merge, schema=_SIDECAR_SCHEMA)
+    final = partials.groupBy("file", "col").applyInPandas(merge, schema=BLOOM_SCHEMA)
     out_dir = os.path.join(table.path, BLOOM_DIR)
     final.write.mode("append").parquet(out_dir)
     bc.unpersist()
@@ -204,7 +210,7 @@ def candidate_files(
         "exists(all_hs, hs -> aggregate(hs, true,"
         f" (acc, h) -> acc and ({bit_at})))"
     )
-    probe = spark.read.schema(_SIDECAR_SCHEMA).parquet(side).filter(
+    probe = spark.read.schema(BLOOM_SCHEMA).parquet(side).filter(
         F.col("col") == col
     )
     if len(values) <= _LITERAL_PROBE_MAX:
@@ -245,14 +251,5 @@ def read_point(table: "SortedTable", col: str, values: Sequence[Any]) -> DataFra
     cand = candidate_files(table, pcol, values)
     if cand is None:
         return table.read().filter(F.col(col).isin(list(values)))
-    if not cand:
-        import json
-
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(m.schema_json))
-        return table._to_logical(table.spark.createDataFrame([], schema), m)
-    df = table.apply_dv(
-        table._reader(m).parquet(*[os.path.join(table.path, n) for n in cand]), m
-    )
+    df = table._scan(m, cand)
     return table._to_logical(df.filter(F.col(pcol).isin(list(values))), m)

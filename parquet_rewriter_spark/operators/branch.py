@@ -185,7 +185,7 @@ def rebase_branch(table: SortedTable, name: str) -> dict[str, Any]:
     if os.path.exists(spill):
         shutil.rmtree(spill)
     ops.write.parquet(spill)
-    delta_df = table.spark.read.parquet(spill)
+    delta_df = table.spark.read.schema(ops.schema).parquet(spill)
     n = delta_df.count()  # parquet metadata count — no data scan
     tmp_new = old + ".rebasing"
     if os.path.exists(tmp_new):

@@ -69,11 +69,11 @@ def snapshot_diff(
 
     old_names = {e.name for e in m_old.files}
     new_names = {e.name for e in m_new.files}
-    removed = [os.path.join(table.path, n) for n in sorted(old_names - new_names)]
-    added = [os.path.join(table.path, n) for n in sorted(new_names - old_names)]
+    removed = sorted(old_names - new_names)
+    added = sorted(new_names - old_names)
 
     # PHYSICAL-name frame: the diff below reads churned files through
-    # _reader (physical) and unions against this schema; renames are
+    # read_files (physical) and unions against this schema; renames are
     # presentation-layer and applied (when requested) as the very last
     # projection, so changelog STORAGE stays physical (like Delta's CDF
     # under column mapping) while direct consumers see logical names
@@ -89,9 +89,8 @@ def snapshot_diff(
     # before an additive schema evolution lack the newer columns and must
     # null-fill (a bare read would fail selecting them); pinning also
     # skips footer inference
-    reader = table._reader(m_new)
-    old = reader.parquet(*removed) if removed else empty
-    new = reader.parquet(*added) if added else empty
+    old = table.read_files(removed, m_new.schema_json) if removed else empty
+    new = table.read_files(added, m_new.schema_json) if added else empty
 
     # Merge-on-read deletion vectors: each snapshot's logical contents
     # are (files − tombstones), so subtract each side's own DV set from
@@ -100,9 +99,9 @@ def snapshot_diff(
     dv_old = table.dv_keys(m_old)
     dv_new = table.dv_keys(m_new)
     if dv_old is not None:
-        old = old.join(dv_old.select(key).distinct(), on=key, how="left_anti")
+        old = old.join(dv_old.select(key), on=key, how="left_anti")
     if dv_new is not None:
-        new = new.join(dv_new.select(key).distinct(), on=key, how="left_anti")
+        new = new.join(dv_new.select(key), on=key, how="left_anti")
 
     # A DV-only delete commit changes NO data files — the churn scope
     # must additionally include rows tombstoned (between the versions)
@@ -116,12 +115,12 @@ def snapshot_diff(
         if e.name in old_names and e.dv_rows > old_dv_rows.get(e.name, 0)
     ]
     if grown:
-        delta = dv_new.filter(F.col("file").isin(grown)).select(key).distinct()
+        delta = dv_new.filter(F.col("file").isin(grown)).select(key)
         if dv_old is not None:
             delta = delta.join(dv_old.select(key), on=key, how="left_anti")
-        tomb_rows = reader.parquet(
-            *[os.path.join(table.path, n) for n in grown]
-        ).join(delta, on=key, how="left_semi")
+        tomb_rows = table.read_files(grown, m_new.schema_json).join(
+            delta, on=key, how="left_semi"
+        )
         old = old.unionByName(tomb_rows) if removed else tomb_rows
 
     o = old.select(

@@ -173,14 +173,11 @@ def purge_columns(
     total_rows = sum(e.rows for e in dirty)
     if max_records_per_file is None:
         max_records_per_file = max(1, -(-total_rows // len(dirty)))
-    df = table._reader(m).parquet(
-        *[os.path.join(table.path, e.name) for e in dirty]
+    df = table.apply_dv(
+        table.read_files([e.name for e in dirty], m.schema_json),
+        m,
+        files={e.name for e in dirty if e.dv_rows},
     )
-    dv = table.dv_keys(m, files={e.name for e in dirty if e.dv_rows})
-    if dv is not None:
-        from pyspark.sql import functions as F
-
-        df = df.join(dv.select(m.key).distinct(), on=m.key, how="left_anti")
     staging = _write_rechunked(table, df, m, dirty, max_records_per_file)
     new_entries = table._adopt_staged(staging, m.key)
     from parquet_rewriter_spark.operators.deletion_vectors import retain_dv
@@ -252,9 +249,7 @@ def backfill_column(
         return {"version": m.version, "files_rewritten": 0, "files_remaining": 0}
     batch_names = {e.name for e in batch}
     keep = [e for e in m.files if e.name not in batch_names]
-    df = table._reader(m).parquet(
-        *[os.path.join(table.path, e.name) for e in batch]
-    )
+    df = table.read_files([e.name for e in batch], m.schema_json)
     # expr speaks LOGICAL names; files keep physical ones forever
     logical = table._to_logical(df, m)
     filled = logical.withColumn(name, expr)
@@ -263,9 +258,9 @@ def backfill_column(
     filled = filled.select(
         *[F.col(c).alias(back.get(c, c)) for c in filled.columns]
     )
-    dv = table.dv_keys(m, files={e.name for e in batch if e.dv_rows})
-    if dv is not None:
-        filled = filled.join(dv.select(m.key).distinct(), on=m.key, how="left_anti")
+    filled = table.apply_dv(
+        filled, m, files={e.name for e in batch if e.dv_rows}
+    )
     staging = _write_rechunked(
         table, filled, m, batch, None, num_files=len(batch)
     )
@@ -308,8 +303,6 @@ def compact_incremental(
     zone maps stay exact, pruning marginally looser; the alternative,
     one job per run, does not survive manifests with thousands of runs.)
     """
-    import os
-
     m = table.manifest()
     threshold = max(1, int(target_records_per_file * min_fill))
     small = [e for e in m.files if e.rows < threshold]
@@ -325,14 +318,13 @@ def compact_incremental(
         }
     total_rows = sum(e.rows for e in small)
     n_files = max(1, -(-total_rows // target_records_per_file))  # ceil
-    df = table.spark.read.parquet(*[os.path.join(table.path, e.name) for e in small])
     # tombstones of the rewritten subset become physical here; tombstones
     # of passthrough files carry forward via retain_dv
-    dv = table.dv_keys(m, files={e.name for e in small if e.dv_rows})
-    if dv is not None:
-        from pyspark.sql import functions as F
-
-        df = df.join(dv.select(m.key).distinct(), on=m.key, how="left_anti")
+    df = table.apply_dv(
+        table.read_files([e.name for e in small], m.schema_json),
+        m,
+        files={e.name for e in small if e.dv_rows},
+    )
     staging = _write_rechunked(
         table, df, m, small, target_records_per_file, num_files=n_files
     )

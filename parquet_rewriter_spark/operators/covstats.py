@@ -43,6 +43,7 @@ from parquet_rewriter_spark.operators.sidecar import (
 )
 
 COV_DIR = register_sidecar("_covstats")
+COV_SCHEMA = "file string, col string, n long, s binary, ss binary"
 
 
 def _sidecar(table) -> str:
@@ -53,9 +54,10 @@ def _have_rows(table, pcol: str) -> set[str]:
     return have_files(table, COV_DIR, where=F.col("col") == pcol)
 
 
-def _build_for(table, names: list[str], pcol: str) -> int:
-    """One row per file: group the files' rows by source file and reduce
-    each group to its triple with one numpy matmul."""
+def _build_for(table, names: list[str], pcol: str, schema=None) -> int:
+    """One row per file: group the files' rows (read under ``schema``,
+    see ``SortedTable.read_files``; None infers it) by source file and reduce each
+    group to its triple with one numpy matmul."""
     if not names:
         return 0
     from parquet_rewriter_spark.ship import ensure_shipped
@@ -63,7 +65,7 @@ def _build_for(table, names: list[str], pcol: str) -> int:
     spark = table.spark
     ensure_shipped(spark)
     src = (
-        spark.read.parquet(*[os.path.join(table.path, n) for n in names])
+        table.read_files(names, schema)
         .select(
             F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
             F.col(pcol).alias("vec"),
@@ -82,9 +84,7 @@ def _build_for(table, names: list[str], pcol: str) -> int:
             }
         )
 
-    rows = src.groupBy("file").applyInPandas(
-        triple, "file string, col string, n long, s binary, ss binary"
-    )
+    rows = src.groupBy("file").applyInPandas(triple, COV_SCHEMA)
     rows.write.mode("append").parquet(_sidecar(table))
     return len(names)
 
@@ -97,7 +97,7 @@ def build_covariance_stats(table, vec_col: str) -> int:
     pcol = table.to_physical(vec_col, m)
     have = _have_rows(table, pcol)
     todo = [e.name for e in m.files if e.name not in have]
-    return _build_for(table, todo, pcol)
+    return _build_for(table, todo, pcol, m.schema_json)
 
 
 def covariance_from_stats(
@@ -130,10 +130,10 @@ def covariance_from_stats(
     have = _have_rows(table, pcol)
     missing = [n for n in names if n not in have]
     if missing:
-        _build_for(table, missing, pcol)
+        _build_for(table, missing, pcol, m.schema_json)
     rows = (
         semi_join_files(
-            table.spark.read.parquet(_sidecar(table))
+            table.spark.read.schema(COV_SCHEMA).parquet(_sidecar(table))
             .filter(F.col("col") == pcol),
             names,
         )

@@ -13,7 +13,10 @@ parquet + the manifest.
 
 Key-uniqueness makes the read-side application trivially correct: a
 tombstoned key can only ever match the one row it was written for, so
-``read()`` anti-joins the union of DV keys with no per-file scoping.
+``read()`` anti-joins the union of DV keys with no per-file scoping —
+and with no dedup either: an anti (or semi) join's result does not
+depend on how often a key repeats on its build side, while a distinct
+would add a shuffle job to every scan.
 Per-file scoping still matters on the WRITE side — it is what lets a
 later merge/compaction know which files need materializing and lets a
 re-upsert resurrect a key (the zone-map planner marks the tombstoned
@@ -67,7 +70,7 @@ def delete_keys_mor(table: SortedTable, keys: DataFrame) -> dict:
     spark = table.spark
     m = table.manifest()
     key = m.key
-    keys = keys.select(F.col(key)).distinct()
+    keys = keys.select(F.col(key))
 
     covered, _ = plan_dirty_files(spark, m, keys)
     if not covered:
@@ -75,16 +78,14 @@ def delete_keys_mor(table: SortedTable, keys: DataFrame) -> dict:
 
     # Resolve (file, key) for keys that exist and are not already
     # tombstoned. Only the key column is read (columnar projection) —
-    # the scan touches one column of the covered files.
-    paths = [os.path.join(table.path, e.name) for e in covered]
-    base = (
-        spark.read.parquet(*paths)
+    # the scan touches one column of the covered files. Duplicate keys
+    # in the batch are harmless: a semi join emits each row once.
+    base = table.apply_dv(
+        table.read_files([e.name for e in covered], m.schema_json)
         .select(F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"), key)
-        .join(keys, on=key, how="left_semi")
+        .join(keys, on=key, how="left_semi"),
+        m,
     )
-    existing = table.dv_keys(m)
-    if existing is not None:
-        base = base.join(existing.select(key), on=key, how="left_anti")
 
     rel = f"{DV_DIR}/dv-{uuid.uuid4().hex}"
     out = os.path.join(table.path, rel)
@@ -93,7 +94,7 @@ def delete_keys_mor(table: SortedTable, keys: DataFrame) -> dict:
     # per-file accounting (bounded by the covered-file count)
     per_file = {
         r["file"]: r["n"]
-        for r in spark.read.parquet(out).groupBy("file").agg(F.count("*").alias("n")).collect()
+        for r in table.read_dv(m, [rel]).groupBy("file").agg(F.count("*").alias("n")).collect()
     }
     added = sum(per_file.values())
     if not added:  # all keys absent/already tombstoned: no new snapshot
@@ -193,11 +194,7 @@ def materialize_deletes(table: SortedTable, max_records_per_file: int | None = N
     if not dvd:
         return {"version": m.version, "files_rewritten": 0, "rows_dropped": 0}
 
-    dv = table.dv_keys(m)
-    assert dv is not None
-    reader = table._reader(m)
-    df = reader.parquet(*[os.path.join(table.path, e.name) for e in dvd])
-    live = df.join(dv.select(m.key).distinct(), on=m.key, how="left_anti")
+    live = table.apply_dv(table.read_files([e.name for e in dvd], m.schema_json), m)
 
     mrpf = max_records_per_file or max((e.rows for e in m.files), default=1_000_000)
     from parquet_rewriter_spark.operators.compact import _write_rechunked

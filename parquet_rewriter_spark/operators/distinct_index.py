@@ -75,16 +75,16 @@ def refresh_distinct_index(table: "SortedTable", cols: list[str]) -> int:
     a merge, the missing set is exactly the files the commit wrote —
     churn-proportional by construction.
     """
-    live = {e.name for e in table.manifest().files}
+    m = table.manifest()
+    live = {e.name for e in m.files}
     added = 0
     parts = []
     for col in cols:
         missing = sorted(live - sketched_files(table, col))
         if not missing:
             continue
-        paths = [os.path.join(table.path, n) for n in missing]
         sk = (
-            table.spark.read.parquet(*paths)
+            table.read_files(missing, m.schema_json)
             .select(
                 F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
                 F.col(col).alias("v"),

@@ -36,6 +36,7 @@ from parquet_rewriter_spark.operators.sidecar import (
 )
 
 SKETCH_DIR = register_sidecar("_distinct")
+SKETCH_SCHEMA = "file string, col string, sketch binary"
 DEFAULT_LGK = 12
 
 
@@ -53,16 +54,17 @@ def _have_rows(table, pcols: list[str]) -> set[tuple[str, str]]:
     )
 
 
-def _build_for(table, names: list[str], pcols: list[str], lgk: int) -> int:
+def _build_for(table, names: list[str], pcols: list[str], lgk: int,
+               schema=None) -> int:
     """Sketch exactly ``names`` (file names, PHYSICAL cols): one job
-    over just those files — group by source file, one HLL aggregate per
-    column — append to the sidecar. Duplicate (file, col) rows are
-    harmless: HLL union is idempotent, so a racing double-build cannot
-    skew estimates."""
+    over just those files, read under ``schema`` (see
+    ``SortedTable.read_files``; None infers it) — group by source file,
+    one HLL aggregate per column — append to the sidecar. Duplicate
+    (file, col) rows are harmless: HLL union is idempotent, so a racing
+    double-build cannot skew estimates."""
     if not names or not pcols:
         return 0
-    spark = table.spark
-    src = spark.read.parquet(*[os.path.join(table.path, n) for n in names])
+    src = table.read_files(names, schema)
     fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
     per_file = src.groupBy(fname.alias("file")).agg(
         *[F.hll_sketch_agg(F.col(c), F.lit(lgk)).alias(c) for c in pcols]
@@ -89,17 +91,20 @@ def build_distinct_sketches(
         e.name for e in m.files
         if any((e.name, c) not in have for c in pcols)
     ]
-    return _build_for(table, todo, pcols, lgk)
+    return _build_for(table, todo, pcols, lgk, m.schema_json)
 
 
 def build_sketches_for(
-    table, entries, pcols: list[str], lgk: int = DEFAULT_LGK
+    table, entries, pcols: list[str], lgk: int = DEFAULT_LGK, schema=None
 ) -> int:
     """Sketch the given manifest entries (PHYSICAL cols) — the hook
     merge_into_table calls for its newly-written files, mirroring
     build_blooms: the incremental cost of a merge's sketch upkeep is
-    proportional to the files the merge rewrote, never the table."""
-    return _build_for(table, [e.name for e in entries], list(pcols), lgk)
+    proportional to the files the merge rewrote, never the table.
+    ``schema`` is what the files were written with; None infers it."""
+    return _build_for(
+        table, [e.name for e in entries], list(pcols), lgk, schema
+    )
 
 
 def enable_distinct_sketches(
@@ -176,11 +181,13 @@ def approx_distinct_range(
     have = _have_rows(table, [pcol])
     missing = [n for n in keep if (n, pcol) not in have]
     if missing:
-        _build_for(table, missing, [pcol], DEFAULT_LGK)
+        _build_for(table, missing, [pcol], DEFAULT_LGK, m.schema_json)
     side = _sidecar(table)
     est = (
         semi_join_files(
-            spark.read.parquet(side).filter(F.col("col") == pcol), keep
+            spark.read.schema(SKETCH_SCHEMA).parquet(side)
+            .filter(F.col("col") == pcol),
+            keep,
         )
         .agg(F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("n"))
         .first()["n"]

@@ -80,13 +80,13 @@ def _have_files(table, sid: str) -> set[str]:
 
 
 def _build_for(table, names: list[str], pv: str, pg: str,
-               edges: Sequence[Any], sid: str) -> int:
+               edges: Sequence[Any], sid: str, schema=None) -> int:
+    """Count matrices for exactly ``names``, read under ``schema``
+    (see ``SortedTable.read_files``; None infers it), appended to the
+    sidecar."""
     if not names:
         return 0
-    spark = table.spark
-    src = spark.read.parquet(
-        *[os.path.join(table.path, n) for n in names]
-    ).select(
+    src = table.read_files(names, schema).select(
         F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
         F.col(pg).alias("grp"),
         _bin_expr(pv, edges).alias("bin"),
@@ -112,20 +112,21 @@ def build_drift_stats(
     sid = _spec_id(pv, pg, edges)
     have = _have_files(table, sid)
     todo = [e.name for e in m.files if e.name not in have]
-    return _build_for(table, todo, pv, pg, edges, sid)
+    return _build_for(table, todo, pv, pg, edges, sid, m.schema_json)
 
 
-def build_drift_for(table, entries, specs: Sequence[dict]) -> int:
+def build_drift_for(table, entries, specs: Sequence[dict], schema=None) -> int:
     """Count matrices for the given manifest entries under every
     REGISTERED monitor spec — the hook merge_into_table calls for its
     newly-written files (mirroring build_sketches_for): upkeep cost is
-    proportional to the files the merge rewrote, never the table."""
+    proportional to the files the merge rewrote, never the table.
+    ``schema`` is what the files were written with; None infers it."""
     total = 0
     names = [e.name for e in entries]
     for spec in specs:
         pv, pg, edges = spec["value"], spec["group"], spec["edges"]
         total += _build_for(
-            table, names, pv, pg, edges, _spec_id(pv, pg, edges)
+            table, names, pv, pg, edges, _spec_id(pv, pg, edges), schema
         )
     return total
 
@@ -288,7 +289,7 @@ def _histogram_at(table, m, pv: str, pg: str, edges: Sequence[Any],
     have = _have_files(table, sid)
     missing = [n for n in names if n not in have]
     if missing:
-        _build_for(table, missing, pv, pg, edges, sid)
+        _build_for(table, missing, pv, pg, edges, sid, m.schema_json)
     rows = (
         semi_join_files(
             table.spark.read.parquet(_sidecar(table))
@@ -370,7 +371,7 @@ def _group_matrices(table, value_col: str, group_col: str,
     have = _have_files(table, sid)
     missing = [n for n in live if n not in have]
     if missing:
-        _build_for(table, missing, pv, pg, edges, sid)
+        _build_for(table, missing, pv, pg, edges, sid, m.schema_json)
     cells = (
         semi_join_files(
             table.spark.read.parquet(_sidecar(table))
@@ -705,7 +706,7 @@ def _version_cells(table, value_col: str, group_col: str,
     have = _have_files(table, sid)
     missing = [n for n in names if n not in have]
     if missing:
-        _build_for(table, missing, pv, pg, edges, sid)
+        _build_for(table, missing, pv, pg, edges, sid, m_new.schema_json)
     mem_df = table.spark.createDataFrame(
         membership, "version long, file string"
     )

@@ -45,6 +45,7 @@ def maintain(
     from parquet_rewriter_spark.operators.compact import compact_incremental
     from parquet_rewriter_spark.operators.distinct_sketch import (
         SKETCH_DIR,
+        SKETCH_SCHEMA,
         build_distinct_sketches,
     )
     import os
@@ -58,21 +59,24 @@ def maintain(
 
     m = table.manifest()
     if m.bloom_cols:
-        from parquet_rewriter_spark.operators.bloom import BLOOM_DIR
+        from parquet_rewriter_spark.operators.bloom import BLOOM_DIR, BLOOM_SCHEMA
 
         side = os.path.join(table.path, BLOOM_DIR)
         have: set[tuple[str, str]] = set()
         if os.path.isdir(side):
             have = {
                 (r["file"], r["col"])
-                for r in table.spark.read.parquet(side)
+                for r in table.spark.read.schema(BLOOM_SCHEMA).parquet(side)
                 .select("file", "col").collect()
             }
         todo = [
             e for e in m.files
             if any((e.name, c) not in have for c in m.bloom_cols)
         ]
-        built = build_blooms(table, todo, list(m.bloom_cols)) if todo else 0
+        built = (
+            build_blooms(table, todo, list(m.bloom_cols), schema=m.schema_json)
+            if todo else 0
+        )
         report["blooms"] = {"files_built": len(todo), "rows_appended": built}
     else:
         report["blooms"] = {"files_built": 0}
@@ -86,8 +90,8 @@ def maintain(
         if os.path.isdir(side):
             sketch_cols += [
                 r["col"]
-                for r in table.spark.read.parquet(side).select("col")
-                .distinct().collect()
+                for r in table.spark.read.schema(SKETCH_SCHEMA).parquet(side)
+                .select("col").distinct().collect()
                 if r["col"] not in sketch_cols
             ]
     if sketch_cols:
@@ -114,7 +118,7 @@ def maintain(
             sid = _spec_id(pv, pg, edges)
             have = _have_files(table, sid)
             todo = [n for n in live_names if n not in have]
-            built += _build_for(table, todo, pv, pg, edges, sid)
+            built += _build_for(table, todo, pv, pg, edges, sid, m.schema_json)
         report["drift"] = {"files_counted": built}
     else:
         report["drift"] = {"files_counted": 0}

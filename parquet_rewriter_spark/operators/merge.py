@@ -501,9 +501,10 @@ def delete_keys(base: DataFrame, deletes: DataFrame, key: str) -> DataFrame:
     """R4/R11: drop rows whose key appears in ``deletes`` (anti-join).
 
     Absent keys are silently ignored — the reference's no-op delete
-    (ParquetBlockMutator.java:184-185).
+    (ParquetBlockMutator.java:184-185). Repeated keys need no dedup:
+    the anti join's result does not depend on build-side multiplicity.
     """
-    return base.join(deletes.select(key).distinct(), on=key, how="left_anti")
+    return base.join(deletes.select(key), on=key, how="left_anti")
 
 
 # ---------------- dirty-file planning (zone-map pruning) ----------------
@@ -728,7 +729,6 @@ def merge_into_table(
     splitter (operators/quality.py). DELETE rows are exempt (their
     payload columns are not being written).
     """
-    import os
     import time
 
     spark = table.spark
@@ -889,16 +889,14 @@ def merge_into_table(
             return res
 
     if dirty:
-        reader = spark.read if read_schema is None else spark.read.schema(read_schema)
-        base_dirty = reader.parquet(*[os.path.join(table.path, e.name) for e in dirty])
         # merge-on-read deletion vectors: subtract tombstones of the
         # dirty files before merging — the rewrite makes them physical
         # (their sidecar entries are retired at commit below)
-        dv = table.dv_keys(m, files={e.name for e in dirty if e.dv_rows})
-        if dv is not None:
-            base_dirty = base_dirty.join(
-                dv.select(key).distinct(), on=key, how="left_anti"
-            )
+        base_dirty = table.apply_dv(
+            table.read_files([e.name for e in dirty], read_schema),
+            m,
+            files={e.name for e in dirty if e.dv_rows},
+        )
         min_bytes = (
             BUCKET_WRITE_MIN_BYTES
             if bucket_write_min_bytes is None
@@ -1020,7 +1018,14 @@ def merge_into_table(
         merged, key, mrpf, prepartitioned=True,
         bucket_col=_BUCKET if bucketed else None,
     )
-    new_entries = table._adopt_staged(staging, key)
+    # the schema this commit pins — also what the new files carry, so
+    # their sidecar builds read them without footer inference
+    out_schema = (
+        read_schema.json()
+        if read_schema is not None
+        else (m.schema_json or merged.drop(_BUCKET).schema.json())
+    )
+    new_entries = table._adopt_staged(staging, key, schema=out_schema)
     n_new_rows = sum(e.rows for e in new_entries)
     t_write = time.monotonic() - t0
 
@@ -1034,12 +1039,7 @@ def merge_into_table(
                 version=m.version + 1,
                 key=key,
                 files=files,
-                schema_json=(
-                    read_schema.json()
-                    if read_schema is not None
-                    else (m.schema_json
-                          or merged.drop(_BUCKET).schema.json())
-                ),
+                schema_json=out_schema,
                 stats_cols=m.stats_cols,
                 bloom_cols=m.bloom_cols,
                 dv_files=retain_dv(table, m, {e.name for e in clean}),
@@ -1062,7 +1062,9 @@ def merge_into_table(
             build_sketches_for,
         )
 
-        build_sketches_for(table, new_entries, m.sketch_cols)
+        build_sketches_for(
+            table, new_entries, m.sketch_cols, schema=out_schema
+        )
     if m.drift_specs and new_entries:
         # registered drift monitors: count matrices for the rewritten
         # files only (reads would self-heal, but at scan cost the
@@ -1071,7 +1073,7 @@ def merge_into_table(
             build_drift_for,
         )
 
-        build_drift_for(table, new_entries, m.drift_specs)
+        build_drift_for(table, new_entries, m.drift_specs, schema=out_schema)
     if changelog and version != m.version:
         from parquet_rewriter_spark.operators.cdc import write_changelog
 
@@ -1153,19 +1155,23 @@ def _try_splice(table, m, dirty, clean, mutations, key, t_plan, txn=None) -> dic
         # splice itself saved only in the degenerate tiny-table case.
         from parquet_rewriter_spark.operators.bloom import build_blooms
 
-        build_blooms(table, new_entries, m.bloom_cols)
+        build_blooms(table, new_entries, m.bloom_cols, schema=m.schema_json)
     if m.sketch_cols and new_entries:
         from parquet_rewriter_spark.operators.distinct_sketch import (
             build_sketches_for,
         )
 
-        build_sketches_for(table, new_entries, m.sketch_cols)
+        build_sketches_for(
+            table, new_entries, m.sketch_cols, schema=m.schema_json
+        )
     if m.drift_specs and new_entries:
         from parquet_rewriter_spark.operators.driftstats import (
             build_drift_for,
         )
 
-        build_drift_for(table, new_entries, m.drift_specs)
+        build_drift_for(
+            table, new_entries, m.drift_specs, schema=m.schema_json
+        )
     return {
         "version": m.version + 1,
         "files_total": len(m.files),

@@ -182,7 +182,6 @@ def merge_conditional_into_table(
     name. With them, every base row is a candidate and the whole table
     goes dirty — stated cost, same as Delta.
     """
-    import os
     import time
 
     from parquet_rewriter_spark.operators.deletion_vectors import retain_dv
@@ -204,12 +203,11 @@ def merge_conditional_into_table(
     t_plan = time.monotonic() - t0
 
     if dirty:
-        base = table._reader(m).parquet(
-            *[os.path.join(table.path, e.name) for e in dirty]
+        base = table.apply_dv(
+            table.read_files([e.name for e in dirty], m.schema_json),
+            m,
+            files={e.name for e in dirty if e.dv_rows},
         )
-        dv = table.dv_keys(m, files={e.name for e in dirty if e.dv_rows})
-        if dv is not None:
-            base = base.join(dv.select(key).distinct(), on=key, how="left_anti")
     else:
         import json as _json
 

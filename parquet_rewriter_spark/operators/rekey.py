@@ -77,10 +77,7 @@ def _check_unique_key(table: SortedTable, m: Manifest, pkey: str) -> None:
     """One scan, run once at migration start: merge semantics require
     the sort key to be unique and non-null — discovering that 80% of
     the way through a 100 TB rewrite would be operationally brutal."""
-    df = table._reader(m).parquet(
-        *[os.path.join(table.path, e.name) for e in m.files]
-    )
-    col = table.apply_dv(df, m).select(F.col(pkey).alias("__k"))
+    col = table.read_physical(m=m).select(F.col(pkey).alias("__k"))
     # ONE pass answers both preconditions: the duplicate check needed
     # the full per-key groupBy anyway (a limit(1) after a groupBy
     # still pays the whole shuffle), and the null probe folds into the
@@ -202,14 +199,13 @@ def rekey_table(
     batch_names = {e.name for e in batch}
     keep = [e for e in m.files if e.name not in batch_names]
 
-    df = table._reader(m).parquet(
-        *[os.path.join(table.path, e.name) for e in batch]
-    )
     # make merge-on-read tombstones physical for the batch (their DV
     # entries retire at commit, like merge/backfill do)
-    dv = table.dv_keys(m, files={e.name for e in batch if e.dv_rows})
-    if dv is not None:
-        df = df.join(dv.select(m.key).distinct(), on=m.key, how="left_anti")
+    df = table.apply_dv(
+        table.read_files([e.name for e in batch], m.schema_json),
+        m,
+        files={e.name for e in batch if e.dv_rows},
+    )
 
     import time
 

@@ -54,6 +54,42 @@ def _doc_lengths(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _filesystem(spark: SparkSession, path: str):
+    """(Hadoop FileSystem holding ``path``, the JVM Path class)."""
+    HPath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    return HPath(path).getFileSystem(hconf), HPath
+
+
+def _swap_bucket_dirs(
+    spark: SparkSession, live_root: str, fresh_root: str, buckets: list[int]
+) -> None:
+    """Swap each ``bucket=<b>`` directory of ``fresh_root`` into
+    ``live_root``, then delete ``fresh_root``. Per bucket: live → trash
+    (inside ``fresh_root``), fresh → live; a bucket absent from
+    ``fresh_root`` (all its postings retracted) just leaves the live
+    root. Hadoop's rename reports failure by returning false, not by
+    raising: each false raises here, after moving the live directory
+    back, so a failed swap never deletes live postings."""
+    fs, HPath = _filesystem(spark, live_root)
+    fs.mkdirs(HPath(f"{fresh_root}/_trash"))
+    for b in buckets:
+        live = HPath(f"{live_root}/bucket={b}")
+        fresh = HPath(f"{fresh_root}/bucket={b}")
+        trash = HPath(f"{fresh_root}/_trash/bucket={b}")
+        had_live = fs.exists(live)
+        if had_live and not fs.rename(live, trash):
+            raise OSError(f"postings swap: cannot move {live} aside")
+        if fs.exists(fresh) and not fs.rename(fresh, live):
+            if had_live and not fs.rename(trash, live):
+                raise OSError(
+                    f"postings swap: cannot install {fresh} nor restore "
+                    f"{live}; the live postings are at {trash}"
+                )
+            raise OSError(f"postings swap: cannot install {fresh} as {live}")
+    fs.delete(HPath(fresh_root), True)
+
+
 class SearchIndex:
     def __init__(self, table: SortedTable, path: str, n_buckets: int = 64) -> None:
         self.table = table
@@ -255,19 +291,7 @@ class SearchIndex:
                 self.path, f"_postings-refresh-{_uuid.uuid4().hex}"
             )
             write_partitioned(refreshed, tmp, ["bucket"])
-            jvm = spark.sparkContext._jvm
-            hconf = spark.sparkContext._jsc.hadoopConfiguration()
-            HPath = jvm.org.apache.hadoop.fs.Path
-            for b in buckets:
-                dst = HPath(f"{self._postings_path}/bucket={b}")
-                src = HPath(f"{tmp}/bucket={b}")
-                fs = dst.getFileSystem(hconf)
-                if fs.exists(dst):
-                    fs.delete(dst, True)
-                if fs.exists(src):
-                    fs.rename(src, dst)
-            tmp_p = HPath(tmp)
-            tmp_p.getFileSystem(hconf).delete(tmp_p, True)
+            _swap_bucket_dirs(spark, self._postings_path, tmp, buckets)
 
         # stats deltas came from the same fused collect (no corpus scan)
         diff.unpersist()

@@ -131,13 +131,15 @@ def _build_for(
     pretokenize: bool,
     sid: str,
     tokenizer: TokenizerRef | None = None,
+    schema=None,
 ) -> int:
+    """Accounting rows for exactly ``names``, read under ``schema``
+    (see ``SortedTable.read_files``; None infers it), appended to the
+    sidecar."""
     if not names:
         return 0
     spark = table.spark
-    base = spark.read.parquet(
-        *[os.path.join(table.path, n) for n in names]
-    ).select(
+    base = table.read_files(names, schema).select(
         F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
         F.col(ps).alias("source"),
         words_expr(pt, pretokenize).alias("__words"),
@@ -226,7 +228,9 @@ def build_token_stats(
     sid = _spec_id(ps, pt, pretokenize, tokenizer)
     have = have_files(table, TOKEN_DIR, where=F.col("spec") == sid)
     todo = [e.name for e in m.files if e.name not in have]
-    return _build_for(table, todo, pt, ps, pretokenize, sid, tokenizer)
+    return _build_for(
+        table, todo, pt, ps, pretokenize, sid, tokenizer, m.schema_json
+    )
 
 
 def _parse_spec(sid: str) -> tuple[str, str, bool, TokenizerRef | None]:
@@ -288,7 +292,9 @@ def heal_token_stats(table) -> int:
                 stacklevel=2,
             )
             continue
-        built += _build_for(table, todo, pt_col, ps, pretokenize, sid, tok)
+        built += _build_for(
+            table, todo, pt_col, ps, pretokenize, sid, tok, m.schema_json
+        )
     return built
 
 

@@ -64,8 +64,8 @@ def write_audit_publish(
         base_names = {e.name for e in base_m.files}
         new_entries = [e for e in stage_m.files if e.name not in base_names]
         if audit_changed_only and new_entries:
-            audit_df = stage.spark.read.parquet(
-                *[os.path.join(stage.path, e.name) for e in new_entries]
+            audit_df = stage.read_files(
+                [e.name for e in new_entries], stage_m.schema_json
             )
         else:
             audit_df = stage.read()

@@ -35,13 +35,24 @@ import os
 import shutil
 import uuid
 from dataclasses import asdict, dataclass, field
-from typing import Any
+from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from parquet_rewriter_spark.stats import collect_file_stats, list_parquet_files
 
 MANIFEST_NAME = "_manifest.json"
+
+# Manifest fields a commit inherits from the previous snapshot when its
+# writer leaves them unset, with the constructor of their empty value
+# (see SortedTable._inherit_unset_fields).
+_INHERITED_FIELDS = (
+    ("rename_map", dict),
+    ("sketch_cols", list),
+    ("drift_specs", list),
+    ("txns", dict),
+)
 
 
 class CommitConflictError(RuntimeError):
@@ -227,6 +238,13 @@ class Manifest:
             txns=d.get("txns") or {},
             rename_map=d.get("rename_map") or {},
         )
+
+
+def _as_schema(schema: "StructType | str") -> StructType:
+    """A StructType, given one or its JSON (a manifest's ``schema_json``)."""
+    if isinstance(schema, StructType):
+        return schema
+    return StructType.fromJson(json.loads(schema))
 
 
 class SortedTable:
@@ -491,49 +509,7 @@ class SortedTable:
         because every writer must win its version claim first.
         """
         m.committed_at = datetime.datetime.now(datetime.timezone.utc).isoformat()
-        if m.rename_map is None and m.version > 0:
-            # inherit the column-rename mapping through commits that
-            # don't know about it (merge, compact, WAP, DV deletes…) —
-            # dropping it would silently resurface physical names
-            try:
-                m.rename_map = dict(self.manifest(m.version - 1).rename_map or {})
-            except Exception:  # noqa: BLE001 - vacuumed history
-                m.rename_map = {}
-        if m.rename_map is None:
-            m.rename_map = {}
-        if m.sketch_cols is None and m.version > 0:
-            # inherit the distinct-sketch registration the same way —
-            # a compact/merge that forgot about it would otherwise stop
-            # auto-refresh and silently let estimates undercount
-            try:
-                m.sketch_cols = list(
-                    self.manifest(m.version - 1).sketch_cols or []
-                )
-            except Exception:  # noqa: BLE001 - vacuumed history
-                m.sketch_cols = []
-        if m.sketch_cols is None:
-            m.sketch_cols = []
-        if m.drift_specs is None and m.version > 0:
-            # inherit registered drift monitors the same way — a commit
-            # that forgot about them would otherwise stop auto-refresh
-            # (reads self-heal, but at scan cost the registration was
-            # meant to avoid)
-            try:
-                m.drift_specs = list(
-                    self.manifest(m.version - 1).drift_specs or []
-                )
-            except Exception:  # noqa: BLE001 - vacuumed history
-                m.drift_specs = []
-        if m.drift_specs is None:
-            m.drift_specs = []
-        if not m.txns and m.version > 0:
-            # carry the txn watermarks forward through commits that
-            # don't know about them (compact, DDL, WAP, DV deletes…) —
-            # otherwise a compaction would reopen the door to replays
-            try:
-                m.txns = dict(self.manifest(m.version - 1).txns)
-            except Exception:  # noqa: BLE001 - pre-txn manifests / vacuumed history
-                pass
+        self._inherit_unset_fields(m)
         snap = os.path.join(self.path, f"_manifest.v{m.version}.json")
         tmp = snap + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
@@ -551,6 +527,30 @@ class SortedTable:
         with open(tmp, "w") as fh:
             fh.write(m.to_json())
         os.replace(tmp, self._manifest_path)
+
+    def _inherit_unset_fields(self, m: Manifest) -> None:
+        """Carry ``_INHERITED_FIELDS`` forward from the previous snapshot
+        when the writer left them unset. Commits that don't know about
+        a field (merge, compact, WAP, DV deletes, DDL…) would otherwise
+        drop it: a lost rename_map resurfaces physical names, lost
+        sketch/drift registrations stop auto-refresh, lost txn
+        watermarks reopen the door to replays. The previous manifest is
+        loaded at most once; when it is unreadable (v0, vacuumed
+        history) every unset field starts empty."""
+        prev: Manifest | None = None
+        loaded = False
+        for name, empty in _INHERITED_FIELDS:
+            val = getattr(m, name)
+            # txns has no explicit-empty form: {} means "unset" too
+            if val is not None and (val or name != "txns"):
+                continue
+            if not loaded and m.version > 0:
+                loaded = True
+                try:
+                    prev = self.manifest(m.version - 1)
+                except Exception:  # noqa: BLE001 - vacuumed history
+                    pass
+            setattr(m, name, empty(getattr(prev, name, None) or empty()))
 
     def file_paths(self, m: Manifest | None = None) -> list[str]:
         m = m or self.manifest()
@@ -605,7 +605,8 @@ class SortedTable:
         else:
             staging = t._write_sorted(df, key, max_records_per_file, num_files)
         entries = t._adopt_staged(
-            staging, key, stats_cols=stats_cols, bloom_cols=bloom_cols
+            staging, key, stats_cols=stats_cols, bloom_cols=bloom_cols,
+            schema=df.schema,
         )
         t._commit_manifest(
             Manifest(
@@ -640,15 +641,17 @@ class SortedTable:
         files and the pinned schema keep physical names forever; only
         the user-facing ``read`` projects to logical names."""
         m = m or self.manifest(version)
-        paths = self.file_paths(m)
-        if not paths:
+        return self._scan(m, [e.name for e in m.files])
+
+    def _scan(self, m: Manifest, names: list[str]) -> DataFrame:
+        """Physical-name read of data files ``names`` of snapshot ``m``
+        under its pinned schema, tombstones subtracted. No names reads
+        as an empty relation typed by the stored schema."""
+        if not names:
             if m.schema_json is None:
                 raise ValueError(f"empty table at {self.path} (no schema recorded)")
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(m.schema_json))
-            return self.spark.createDataFrame([], schema)
-        return self.apply_dv(self._reader(m).parquet(*paths), m)
+            return self.spark.createDataFrame([], _as_schema(m.schema_json))
+        return self.apply_dv(self.read_files(names, m.schema_json), m)
 
     # ---------- column-rename mapping (metadata-only RENAME COLUMN) ----------
     def _to_logical(self, df: DataFrame, m: Manifest) -> DataFrame:
@@ -720,38 +723,59 @@ class SortedTable:
         m = m or self.manifest()
         if not m.dv_files or (files is not None and not files):
             return None
-        dv = self.spark.read.parquet(
-            *[os.path.join(self.path, p) for p in m.dv_files]
-        )
+        dv = self.read_dv(m, m.dv_files)
         if files is not None:
             dv = dv.filter(F.col("file").isin(sorted(files)))
         return dv
 
-    def apply_dv(self, df: DataFrame, m: Manifest | None = None) -> DataFrame:
+    def read_dv(self, m: Manifest, rels: list[str]) -> DataFrame:
+        """Read DV sidecars ``rels`` (paths relative to the table) as
+        ``(file string, <key>)``, the key typed from the manifest's
+        stored schema; a legacy manifest without one infers it."""
+        reader = self.spark.read
+        if m.schema_json is not None:
+            reader = reader.schema(StructType([
+                StructField("file", StringType()),
+                StructField(m.key, _as_schema(m.schema_json)[m.key].dataType),
+            ]))
+        return reader.parquet(*[os.path.join(self.path, p) for p in rels])
+
+    def apply_dv(
+        self,
+        df: DataFrame,
+        m: Manifest | None = None,
+        files: set[str] | None = None,
+    ) -> DataFrame:
         """Drop tombstoned rows from a snapshot scan (one anti-join on
         the key; correct table-wide because keys are unique, so a
         tombstone can only ever match the row it was written for). The
         DV set is tiny relative to the table — Spark auto-broadcasts it
         under the usual threshold, so at scale this is a broadcast anti
-        join on the scan, not a shuffle."""
+        join on the scan, not a shuffle. No dedup of the tombstones: a
+        key listed twice still removes its one row, and a distinct
+        would cost a shuffle job per scan. ``files`` restricts the
+        build side as in ``dv_keys`` (rewrites of a file subset)."""
         m = m or self.manifest()
-        dv = self.dv_keys(m)
+        dv = self.dv_keys(m, files)
         if dv is None:
             return df
-        return df.join(dv.select(m.key).distinct(), on=m.key, how="left_anti")
+        return df.join(dv.select(m.key), on=m.key, how="left_anti")
 
-    def _reader(self, m: Manifest):
-        """Reader pinned to the snapshot's stored schema: files written
+    def read_files(
+        self, names: "Iterable[str]", schema: "StructType | str | None"
+    ) -> DataFrame:
+        """Scan this table's data files by name under a pinned schema —
+        the one reader for files the engine wrote itself. ``schema`` is
+        what the files were written with or evolved to (a StructType, or
+        its JSON such as a manifest's ``schema_json``): files written
         before an additive schema evolution lack the newer columns and
-        the parquet source null-fills them; also skips footer schema
-        inference entirely (one less driver-side file open at scale)."""
-        if m.schema_json is None:
-            return self.spark.read
-        from pyspark.sql.types import StructType
-
-        return self.spark.read.schema(
-            StructType.fromJson(json.loads(m.schema_json))
-        )
+        the parquet source null-fills them, and no footer-inference job
+        runs. ``None`` (a legacy manifest without a stored schema) falls
+        back to inference."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(_as_schema(schema))
+        return reader.parquet(*[os.path.join(self.path, n) for n in names])
 
     def read_range(
         self,
@@ -768,23 +792,12 @@ class SortedTable:
         inside each file). Bounds are inclusive; either side may be None.
         """
         m = self.manifest(version)
-        entries = [
-            e
+        df = self._scan(m, [
+            e.name
             for e in m.files
             if (upper is None or e.key_min <= upper)
             and (lower is None or e.key_max >= lower)
-        ]
-        if not entries:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(m.schema_json))
-            return self.spark.createDataFrame([], schema)
-        df = self.apply_dv(
-            self._reader(m).parquet(
-                *[os.path.join(self.path, e.name) for e in entries]
-            ),
-            m,
-        )
+        ])
         # residual predicate (pushed to the parquet scan) — manifest
         # pruning is file-granular, rows outside the bound remain
         if lower is not None:
@@ -812,19 +825,9 @@ class SortedTable:
         residual predicate is pushed into the parquet scan.
         """
         m = self.manifest(version)
-        entries = [e for e in m.files if self.zone_keep(m, e, predicates)]
-        if not entries:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(m.schema_json))
-            df = self.spark.createDataFrame([], schema)
-        else:
-            df = self.apply_dv(
-                self._reader(m).parquet(
-                    *[os.path.join(self.path, e.name) for e in entries]
-                ),
-                m,
-            )
+        df = self._scan(
+            m, [e.name for e in m.files if self.zone_keep(m, e, predicates)]
+        )
         for col, (lo, hi) in predicates.items():
             pcol = self.to_physical(col, m)
             if lo is not None:
@@ -935,21 +938,26 @@ class SortedTable:
         key: str,
         stats_cols: list[str] | None = None,
         bloom_cols: list[str] | None = None,
+        schema: "StructType | str | None" = None,
     ) -> list[ManifestEntry]:
         """Move staged part-files into the table dir under fresh names.
 
-        ``stats_cols=None`` / ``bloom_cols=None`` mean "inherit the
-        current manifest's" — so merge/compact propagate secondary zone
-        maps and bloom filters without every call site threading them.
+        ``stats_cols=None`` / ``bloom_cols=None`` / ``schema=None`` mean
+        "inherit the current manifest's" — so merge/compact propagate
+        secondary zone maps and bloom filters without every call site
+        threading them. ``schema`` is what the staged files were written
+        with; the bloom build reads them under it. A writer that changes
+        the schema (create, an evolving merge) passes it explicitly.
         """
-        if stats_cols is None or bloom_cols is None:
+        if stats_cols is None or bloom_cols is None or schema is None:
             try:
                 m_cur = self.manifest()
-                inherit_stats, inherit_blooms = m_cur.stats_cols, m_cur.bloom_cols
+                inherit = m_cur.stats_cols, m_cur.bloom_cols, m_cur.schema_json
             except FileNotFoundError:
-                inherit_stats, inherit_blooms = [], []
-            stats_cols = inherit_stats if stats_cols is None else stats_cols
-            bloom_cols = inherit_blooms if bloom_cols is None else bloom_cols
+                inherit = [], [], None
+            stats_cols = inherit[0] if stats_cols is None else stats_cols
+            bloom_cols = inherit[1] if bloom_cols is None else bloom_cols
+            schema = inherit[2] if schema is None else schema
         entries: list[ManifestEntry] = []
         staged = list_parquet_files(staging)
         stats = collect_file_stats(
@@ -974,7 +982,7 @@ class SortedTable:
         if bloom_cols and entries:
             from parquet_rewriter_spark.operators.bloom import build_blooms
 
-            build_blooms(self, entries, bloom_cols)
+            build_blooms(self, entries, bloom_cols, schema=schema)
         return entries
 
     def clone(
@@ -1054,7 +1062,7 @@ class SortedTable:
     def add_column(self, name: str, dtype: str) -> int:
         """Metadata-only ADD COLUMN: append a nullable field to the
         manifest schema. No file is touched — the pinned-schema reader
-        (_reader) null-fills the column for every existing file; the
+        (read_files) null-fills the column for every existing file; the
         next merge writes it physically for rewritten files."""
         from pyspark.sql.types import StructField, StructType
 
@@ -1214,9 +1222,7 @@ class SortedTable:
             return {"ok": True, "files": 0, "unsorted_files": 0,
                     "duplicate_keys": 0, "manifest_mismatches": 0}
         key = m.key
-        df = self._reader(m).parquet(
-            *[os.path.join(self.path, e.name) for e in m.files]
-        ).select(
+        df = self.read_files([e.name for e in m.files], m.schema_json).select(
             F.element_at(F.split(F.input_file_name(), "/"), -1).alias("__f"),
             F.col(key).alias("__k"),
         )

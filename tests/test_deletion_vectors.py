@@ -218,3 +218,41 @@ def test_clone_carries_tombstones(spark, table, tmp_path):
     c = table.clone(str(tmp_path / "mor_clone"))
     assert c.read().count() == table.read().count()
     assert c.read().filter(F.col(KEY).isin(victims)).count() == 0
+
+
+def test_key_tombstoned_twice_drops_exactly_one_row(spark, table):
+    """Tombstones are anti-joined without a dedup. A key repeated in a
+    delete batch, and a key listed by two DV sidecars (as two racing
+    deletes planned against the same snapshot would write), must each
+    still remove exactly the one row it names — on every read path and
+    through materialization."""
+    from parquet_rewriter_spark.table import Manifest
+
+    n0 = table.read().count()
+    victim = table.read().select(KEY).orderBy(KEY).first()[0]
+    res = delete_keys_mor(
+        table, spark.createDataFrame([(victim,), (victim,)], f"{KEY} long")
+    )
+    assert res["dv_rows_added"] == 1
+
+    m = table.manifest()
+    rel = "_dv/dv-again"
+    table.read_dv(m, m.dv_files).write.parquet(os.path.join(table.path, rel))
+    table._commit_manifest(Manifest(
+        version=m.version + 1, key=m.key, files=m.files,
+        schema_json=m.schema_json, stats_cols=m.stats_cols,
+        bloom_cols=m.bloom_cols, dv_files=m.dv_files + [rel],
+        operation="delete (merge-on-read)",
+    ))
+    assert table.dv_keys().filter(F.col(KEY) == victim).count() == 2
+
+    assert table.read().count() == n0 - 1
+    assert table.read().filter(F.col(KEY) == victim).count() == 0
+    assert table.read_range(lower=victim, upper=victim).count() == 0
+    first = table.manifest().files[0]
+    assert (
+        table.read_range(lower=first.key_min, upper=first.key_max).count()
+        == first.rows - 1
+    )
+    assert materialize_deletes(table)["rows_dropped"] == 1
+    assert table.read().count() == n0 - 1

@@ -12,6 +12,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 
@@ -101,14 +102,13 @@ def test_stats_track_deltas(spark, tmp_path):
 
 
 def test_overwrite_partitions_rewrites_with_fresh_file_names(spark, tmp_path):
-    """FS contract the emptied-bucket detection stands on (_mutate's
-    driver-side listing diff): a partition WRITTEN by
-    overwrite_partitions always comes back with FRESH part-file names
-    (task-UUID naming), so 'file set unchanged' is a reliable signal
-    for 'dynamic overwrite skipped this partition' (all postings
-    retracted). If a committer change ever preserved file names on
-    rewrite, emptied buckets would keep stale postings — this test
-    breaks first."""
+    """Contract of sources/sinks.py:overwrite_partitions (dynamic
+    partition overwrite): a partition present in the written frame
+    comes back with FRESH part-file names (task-UUID naming) and none
+    of its old files, while a partition absent from the frame is left
+    bit-for-bit untouched. Callers that reconcile a partitioned layout
+    with it rely on both halves: rewritten partitions never mix old
+    and new files, and skipped partitions cost no I/O."""
     from parquet_rewriter_spark.sources.sinks import overwrite_partitions
 
     path = str(tmp_path / "part_table")
@@ -134,3 +134,72 @@ def test_overwrite_partitions_rewrites_with_fresh_file_names(spark, tmp_path):
     assert after_0 and not (after_0 & before_0), (before_0, after_0)
     # the skipped partition is bit-for-bit untouched
     assert after_1 == before_1
+
+
+class _FailingRename:
+    """A Hadoop FileSystem whose ``rename`` reports failure (returns
+    false, as Hadoop does) for sources matching ``fails``; every other
+    call goes to the real file system."""
+
+    def __init__(self, fs, fails):
+        self._fs, self._fails = fs, fails
+
+    def rename(self, src, dst):
+        if self._fails(str(src)):
+            return False
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def _postings_rows(spark, idx):
+    return sorted(
+        tuple(r) for r in spark.read.parquet(idx._postings_path)
+        .select("bucket", "term", "doc_id", "tf", "dl").collect()
+    )
+
+
+def _patch_rename(monkeypatch, fails):
+    from parquet_rewriter_spark.operators import search_index
+
+    real = search_index._filesystem
+
+    def patched(spark, path):
+        fs, HPath = real(spark, path)
+        return _FailingRename(fs, fails), HPath
+
+    monkeypatch.setattr(search_index, "_filesystem", patched)
+
+
+def test_bucket_swap_raises_and_keeps_live_postings_when_rename_fails(
+    spark, tmp_path, monkeypatch
+):
+    """Hadoop's rename reports failure by returning false. The swap
+    must raise instead of carrying on, and must never have deleted the
+    live bucket first: whichever rename fails (moving the live bucket
+    aside, or installing the fresh one), the live postings survive."""
+    from parquet_rewriter_spark.operators.search_index import SearchIndex
+
+    base = [(1, "alpha beta gamma"), (2, "beta delta"), (3, "epsilon zeta")]
+    idx = SearchIndex.build(
+        spark, str(tmp_path / "idx"), _docs(spark, base), n_buckets=8
+    )
+    before = _postings_rows(spark, idx)
+    files_before = _bucket_files(idx.path)
+
+    for fails, batch in (
+        # the live bucket cannot be moved aside
+        (lambda src: True, [(4, "alpha omega"), (2, "beta theta")]),
+        # the fresh bucket cannot be installed: the live one moves back
+        (
+            lambda src: "_postings-refresh-" in src and "_trash" not in src,
+            [(5, "alpha kappa"), (1, "gamma lambda")],
+        ),
+    ):
+        _patch_rename(monkeypatch, fails)
+        with pytest.raises(OSError, match="postings swap"):
+            idx.add(_docs(spark, batch))
+        assert _postings_rows(spark, idx) == before
+        assert _bucket_files(idx.path) == files_before
+        monkeypatch.undo()
